@@ -241,7 +241,7 @@ RATIO_BAND = (0.8, 1.25)
 # front warm because the owner's LAST timed run leaves it built —
 # the shared-materialized-view story is unchanged; only the owner's
 # headline stops billing a dict lookup as query time. The values are
-# (cache_name, *key_match) tuples for session_cache.evict_named.
+# (front_name, *key_match) tuples for session_cache.evict.
 _RESULT_FRONT_OWNERS: dict[str, tuple] = {
     "sim_ann_join": (("ann_result",),),
     "sim_knn_blocked_full": (("sim_stage", "knn_full_topk"),),
@@ -339,19 +339,28 @@ def _scaling_worker(sf_dir: str) -> None:
     spark.stop()
 
 
+def _scaling_legs() -> tuple[int, int]:
+    """(high, low) core counts for --scaling: the host's full count
+    and a quarter of it (at least 1), so neither leg oversubscribes."""
+    high = os.cpu_count() or 1
+    return high, max(1, high // 4)
+
+
 def _scaling_main() -> None:
-    """Parent: synthesize/reuse the sf1.0 dir, run the worker at 32
-    and 8 cores, merge a `scaling` block into the newest BENCH_LOCAL
-    record (creating the file if the bench has not run this round)."""
+    """Parent: synthesize/reuse the sf1.0 dir, run the worker at the
+    host's full core count and at a quarter of it, merge a `scaling`
+    block into the newest BENCH_LOCAL record (creating the file if
+    the bench has not run this round)."""
     import subprocess
 
     from tests.test_scale_10x import SCALE_DIR, _build_scale_dir
 
     _build_scale_dir()
-    per_cpus: dict[str, dict] = {}
-    for cpus in ("32", "8"):
+    high, low = _scaling_legs()
+    per_cpus: dict[int, dict] = {}
+    for cpus in (high, low):
         env = dict(os.environ)
-        env["SPARK_GRAFT_CPUS"] = cpus
+        env["SPARK_GRAFT_CPUS"] = str(cpus)
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--scaling-worker", SCALE_DIR],
             capture_output=True,
@@ -375,16 +384,18 @@ def _scaling_main() -> None:
         "sf_dir": SCALE_DIR,
         "note": (
             "warm sec at ~sf1.0 (10x key-shifted replication); "
-            "ratio_8_over_32 > 1 means more cores help"
+            "ratio_low_over_high > 1 means more cores help"
         ),
         "loadavg": _loadavg(),
         "calib": _calibration_probe(),
-        "cpus32": per_cpus["32"],
-        "cpus8": per_cpus["8"],
-        "ratio_8_over_32": {
-            op: round(per_cpus["8"][op]["warm"] / per_cpus["32"][op]["warm"], 2)
-            for op in per_cpus["32"]
-            if per_cpus["8"].get(op, {}).get("warm")
+        "cpus_high": high,
+        "cpus_low": low,
+        "high": per_cpus[high],
+        "low": per_cpus[low],
+        "ratio_low_over_high": {
+            op: round(per_cpus[low][op]["warm"] / per_cpus[high][op]["warm"], 2)
+            for op in per_cpus[high]
+            if per_cpus[low].get(op, {}).get("warm")
         },
     }
     path = os.path.join(REPO_ROOT, f"BENCH_LOCAL_r{_next_round():02d}.json")
@@ -472,7 +483,7 @@ def main() -> None:
             pass  # warmup is best-effort; the sweep itself will report
 
     from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
-        evict_named,
+        evict,
         evict_staged,
     )
     from pe_firm_investment_database_pipeline_spark.streaming.windows import (
@@ -543,7 +554,7 @@ def main() -> None:
         # timed sample, so cold ≈ warm ≈ build+serve for front owners
         def run_once(op_id=op_id, fn=fn) -> float:
             for spec in _RESULT_FRONT_OWNERS.get(op_id, ()):
-                evict_named(*spec)
+                evict(*spec)
             if op_id in _STREAM_STATE_OWNERS:
                 evict_stream_state(spark, sf_dir, op_id)
             return timed_run(fn)
@@ -595,15 +606,7 @@ def main() -> None:
     # persist the FULL result in-repo so every round keeps regression
     # visibility (r5 verdict lost per-op times for ~135 entries).
     local_path = os.path.join(REPO_ROOT, f"BENCH_LOCAL_r{_next_round():02d}.json")
-    # preserve a `scaling` block a prior --scaling run merged into
-    # this round's record (separate experiment, separate data dir)
-    if os.path.exists(local_path):
-        try:
-            prior = json.load(open(local_path))
-            if "scaling" in prior and "scaling" not in out:
-                out["scaling"] = prior["scaling"]
-        except (OSError, json.JSONDecodeError):
-            pass
+    out = _merge_prior_record(out, local_path)
     with open(local_path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     # Memory hygiene for anything running after the sweep in the same
@@ -611,6 +614,19 @@ def main() -> None:
     evict_staged()
     print(json.dumps(out))
     spark.stop()
+
+
+def _merge_prior_record(out: dict, path: str) -> dict:
+    """``out`` plus every key of the record already at ``path`` that
+    this sweep did not write itself — e.g. the `scaling` blocks a
+    --scaling run (separate experiment, separate data dir) merged into
+    this round's record. Keys the sweep wrote win."""
+    try:
+        with open(path) as f:
+            prior = json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return out
+    return {**prior, **out}
 
 
 def _next_round() -> int:

@@ -1,85 +1,56 @@
-"""Session-keyed cache hygiene for memoized (persisted) DataFrames.
+"""The one per-(application, dataset) store for memoized fronts and
+staged inputs.
 
-Several plan modules memoize staged frames ("fronts") per
-(applicationId, dataset). This module centralizes the three hygiene
-rules every memoizer must follow:
+Plan modules stage expensive intermediates ("fronts") once and reuse
+them across invocations: persisted or localCheckpointed DataFrames,
+staged parquet/JSONL directories, and catalog tables laid out once
+per dataset. Every such reuse goes through ``front``, which keys the
+value by ``(applicationId, sf_dir, dataset_fingerprint(sf_dir), name,
+*key)`` in one process-wide store and enforces three hygiene rules:
 
 1. **Eviction** — keys of STOPPED sessions can never be hit again,
    but without eviction they pin the persisted DataFrame plus the
    whole dead-session object graph for the process lifetime. Every
-   cache MISS sweeps ALL registered caches (inserts are rare; hits
-   pay nothing), so a long-lived process that cycles sessions but
-   hits warm caches on one family still frees the others.
-2. **Staleness** — ``staged_key`` folds a cheap dataset fingerprint
-   (max parquet (mtime_ns, size) under sf_dir) into every key, so a
-   rewrite of any table under sf_dir within one Spark application
-   changes the key and the front is rebuilt instead of silently
-   serving a checkpoint of the old data. The fingerprint is an
-   os.scandir sweep over the handful of files in a dataset dir —
-   microseconds against a build that scans the tables themselves.
-3. **Concurrency** — ``memoize`` guards the miss path with a
-   module-level lock and a double-checked insert, so two concurrent
-   callers in one process build the front once instead of leaking a
-   checkpoint's blocks until application exit.
+   MISS sweeps every other application's entries out of the store
+   (inserts are rare; hits pay nothing), so a long-lived process
+   that cycles sessions but hits warm fronts on one family still
+   frees the others.
+2. **Staleness** — the key folds in a cheap dataset fingerprint (max
+   parquet (mtime_ns, size) under sf_dir), so a rewrite of any table
+   under sf_dir within one Spark application changes the key and the
+   front is rebuilt instead of silently serving a checkpoint of the
+   old data. The fingerprint is an os.scandir sweep over the handful
+   of files in a dataset dir — microseconds against a build that
+   scans the tables themselves.
+3. **Concurrency** — the miss path takes one module-level lock and
+   re-checks before building, so two concurrent callers in one
+   process build a front once instead of leaking a checkpoint's
+   blocks (or racing two writers into one staging dir).
+
+``evict(name, *match)`` drops one front family (the bench's
+result-front accounting); ``evict_staged`` drops everything.
+``staging_dir`` names the per-application temp directories staged
+fronts write to.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 import threading
 from typing import Callable, TypeVar
 
-# Every memoizing plan module registers its cache dict here so a
-# sweep harness (bench.py, the driver-sim) can bound executor storage
-# between entry families without knowing module internals.
-_ALL_CACHES: list[dict] = []
-
-# Caches registered WITH a name can additionally be evicted one at a
-# time (``evict_named``). The r12 verdict's result-front accounting
-# rule needs this granularity: a registry entry whose declared result
-# is itself a memoized front must have THAT front (and only that
-# front) dropped before each timed benchmark run, so the recorded
-# time is build+serve rather than a cache read — while the amortized
-# index fronts other entries legitimately share stay warm.
-_NAMED_CACHES: dict[str, dict] = {}
+# (applicationId, sf_dir, fingerprint, name, *key) -> front value
+_STORE: dict[tuple, object] = {}
 
 # One process-wide lock for all miss paths: front builds are rare and
 # heavyweight (a localCheckpoint executes the build job under the
-# lock), so a single lock costs nothing and removes any lock-ordering
-# question between caches that build through each other.
-_MEMO_LOCK = threading.RLock()
+# lock), so a single lock costs nothing. Re-entrant, because a front
+# build may itself read other fronts.
+_LOCK = threading.RLock()
 
 T = TypeVar("T")
-
-
-def register_cache(cache: dict, name: str | None = None) -> dict:
-    _ALL_CACHES.append(cache)
-    if name is not None:
-        _NAMED_CACHES[name] = cache
-    return cache
-
-
-def evict_named(name: str, *match) -> int:
-    """Unpersist and drop entries of ONE named cache — the targeted
-    sibling of ``evict_staged``. When ``match`` elements are given,
-    only entries whose key tuple contains every element are dropped
-    (e.g. the ``("scd2", "all")`` subset of a cache shared by two
-    entries under distinct subset keys). Unknown names evict nothing
-    (0) rather than raising, so a sweep harness can carry a static
-    owner map across code versions. Returns the eviction count."""
-    cache = _NAMED_CACHES.get(name)
-    if cache is None:
-        return 0
-    n = 0
-    with _MEMO_LOCK:
-        for k in [k for k in cache if all(m in k for m in match)]:
-            df = cache.pop(k)
-            n += 1
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # stopped session / non-persisted frame
-    return n
 
 
 def dataset_fingerprint(sf_dir: str) -> tuple[int, int]:
@@ -115,69 +86,76 @@ def dataset_fingerprint(sf_dir: str) -> tuple[int, int]:
     return (newest, total)
 
 
-def staged_key(spark, sf_dir: str, *extra) -> tuple:
-    """Canonical cache key for a staged front: (applicationId,
-    sf_dir, dataset_fingerprint, *extra).
+def front(spark, sf_dir: str, name: str, build: Callable[[], T], *key) -> T:
+    """Return the memoized ``build()`` result for ``name`` (+ ``key``)
+    in this application over this dataset, building it on a miss.
 
-    Keyed by applicationId, not id(spark): Python can reuse a freed
-    object's id for a new session, which would resurrect checkpoints
-    of a stopped SparkContext. The fingerprint component means a
-    same-application rewrite of the dataset re-keys every consumer
-    (hygiene rule 2 above)."""
-    return (spark.sparkContext.applicationId, sf_dir, dataset_fingerprint(sf_dir), *extra)
-
-
-def memoize(cache: dict, key: tuple, build: Callable[[], T]) -> T:
-    """Double-checked, locked memoization for staged fronts.
-
-    The fast path (hit) is a plain dict get. The miss path takes
-    ``_MEMO_LOCK``, re-checks, sweeps stale-application entries out
-    of EVERY registered cache, then runs ``build()`` — which is
-    expected to return an already-persisted/localCheckpointed frame —
-    and inserts it. ``key[0]`` must be the applicationId (use
-    ``staged_key``)."""
-    df = cache.get(key)
-    if df is not None:
-        return df
-    with _MEMO_LOCK:
-        df = cache.get(key)
-        if df is None:
-            evict_stale_apps(cache, key[0])
-            df = cache[key] = build()
-        return df
+    ``build`` must return the finished value — an already persisted
+    or localCheckpointed DataFrame, a staged path, a tuple of table
+    names. Keyed by applicationId, not id(spark): Python can reuse a
+    freed object's id for a new session, which would resurrect
+    checkpoints of a stopped SparkContext. The hit path is a plain
+    dict get; the miss path takes the lock, re-checks, sweeps other
+    applications' entries, then builds and inserts."""
+    app = spark.sparkContext.applicationId
+    k = (app, sf_dir, dataset_fingerprint(sf_dir), name, *key)
+    value = _STORE.get(k)
+    if value is not None:
+        return value
+    with _LOCK:
+        value = _STORE.get(k)
+        if value is None:
+            for stale in [s for s in _STORE if s[0] != app]:
+                del _STORE[stale]
+            value = _STORE[k] = build()
+        return value
 
 
-def evict_stale_apps(cache: dict, app_id: str) -> None:
-    """Drop entries whose leading key element is another application's
-    id — from the touched cache AND every other registered cache, so
-    dead-application entries can't hide in a cache that never misses.
-    Safe even with two live sessions in one process — an evicted live
-    entry is merely rebuilt on its next use."""
-    for c in _ALL_CACHES:
-        for k in [k for k in c if k[0] != app_id]:
-            del c[k]
-    # an unregistered cache passed directly still gets swept
-    if cache is not None and all(cache is not c for c in _ALL_CACHES):
-        for k in [k for k in cache if k[0] != app_id]:
-            del cache[k]
+def _drop(keys: list[tuple]) -> int:
+    for k in keys:
+        value = _STORE.pop(k)
+        if hasattr(value, "unpersist"):
+            try:
+                value.unpersist()
+            except Exception:
+                pass  # stopped session
+    return len(keys)
+
+
+def evict(name: str, *match) -> int:
+    """Drop (and unpersist) the fronts called ``name``. When ``match``
+    elements are given, only fronts whose key contains every element
+    are dropped (e.g. the ``"all"`` subset of the ``scd2`` front shared
+    by two entries under distinct subset keys). Unknown names evict
+    nothing (0) rather than raising, so a sweep harness can carry a
+    static owner map across code versions. Returns the count."""
+    with _LOCK:
+        return _drop(
+            [k for k in _STORE if k[3] == name and all(m in k for m in match)]
+        )
 
 
 def evict_staged() -> int:
-    """Unpersist and forget every memoized staged frame across all
-    registered caches — the memory-pressure guard for 100+-entry
-    sweeps (a staged index is rebuilt on next use, so this only costs
-    recomputation, never correctness). Returns the number of entries
-    evicted. localCheckpoint-backed frames release their blocks via
-    the ContextCleaner once the reference is dropped; persist-backed
-    frames are unpersisted eagerly here."""
-    n = 0
-    with _MEMO_LOCK:
-        for cache in _ALL_CACHES:
-            for df in cache.values():
-                n += 1
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # stopped session / non-persisted frame
-            cache.clear()
-    return n
+    """Forget every front — the memory-pressure guard for 100+-entry
+    sweeps (a front is rebuilt on next use, so this only costs
+    recomputation, never correctness). DataFrame values are
+    unpersisted eagerly; localCheckpoint-backed frames release their
+    blocks via the ContextCleaner once the reference is dropped.
+    Returns the number of fronts evicted."""
+    with _LOCK:
+        return _drop(list(_STORE))
+
+
+def sf_slot(sf_dir: str) -> str:
+    """Dataset discriminator for staged paths and catalog table names:
+    a hash of the FULL sf_dir, so distinct data dirs sharing a
+    basename never collide."""
+    return hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+
+
+def staging_dir(spark, sf_dir: str, kind: str) -> str:
+    """``<tmp>/pe_<kind>_<sf_slot>_<app>``: the staging directory of
+    one kind of staged front. The application id keeps two concurrent
+    drivers from overwriting each other's files mid-stream."""
+    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
+    return os.path.join(tempfile.gettempdir(), f"pe_{kind}_{sf_slot(sf_dir)}_{app}")

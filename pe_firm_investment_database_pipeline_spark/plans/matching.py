@@ -144,7 +144,13 @@ def join_score_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four ~0.6 s supplier-side builds overlap, which A/B'd faster
     # than serializing them behind one eager checkpoint (1.6-1.8 vs
     # 1.8-2.6 s warm at sf0.1; the build stays dimension-sized at
-    # any SF).
+    # any SF). Memory: collect_list buffers each group's full
+    # (suppkey, bal) array before the sort and fold, so the per-group
+    # buffer is O(suppliers), not O(staircase points) — the
+    # (ne nation, ne residue) group of every grid cell holds ~82% of
+    # all suppliers, and the 700 groups together buffer C x 175
+    # structs. Suppliers are a dimension (10k per sf unit), so one
+    # group is ~8.2k structs per sf unit: tens of MB at sf100.
     stairs = (
         member.groupBy("nat_rel", "natkey", "mod_rel", "modkey")
         .agg(

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 from ..streaming.windows import GAP_S  # single source of truth for the gap
@@ -183,16 +183,15 @@ FROM nation
 # non-purchase update stream) stage their fronts under distinct
 # subset keys; the eager localCheckpoint makes every consumer after
 # the first start from a materialized, lineage-free local frame.
-_SCD2_CACHE: dict[tuple, DataFrame] = register_cache({}, name="scd2")
-
-
 def _scd2_front(
     spark: SparkSession, sf_dir: str, subset: str, e: DataFrame
 ) -> DataFrame:
-    return memoize(
-        _SCD2_CACHE,
-        staged_key(spark, sf_dir, "scd2", subset),
+    return front(
+        spark,
+        sf_dir,
+        "scd2",
         lambda: _scd2_changes(e).localCheckpoint(eager=True),
+        subset,
     )
 
 

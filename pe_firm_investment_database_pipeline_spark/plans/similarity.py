@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front, sf_slot, staging_dir
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -176,26 +176,24 @@ _NBITS_IVF = (
 )
 
 
-# Staged (persisted) index frames, memoized per (applicationId,
-# sf_dir-ish key): a 100+-entry registry sweep re-invokes the same
-# builders many times, and a fresh ``persist()`` per invocation
-# accumulates MEMORY_AND_DISK blocks for the session lifetime even
-# when CacheManager dedups the plans. Returning the SAME Python
-# DataFrame bounds live storage at one block set per (session, data
-# dir, index kind).
-_STAGE_CACHE: dict[tuple, DataFrame] = register_cache({}, name="sim_stage")
-
-
+# Staged (persisted) index frames, the "sim_stage" fronts: a
+# 100+-entry registry sweep re-invokes the same builders many times,
+# and a fresh ``persist()`` per invocation accumulates
+# MEMORY_AND_DISK blocks for the session lifetime even when
+# CacheManager dedups the plans. Returning the SAME Python DataFrame
+# bounds live storage at one block set per (session, dataset, index
+# kind).
 def _staged(spark: SparkSession, key: tuple, build, src: DataFrame) -> DataFrame:
-    """Memoized persist. The cache key includes ``src``'s semantic
-    plan hash, not just the caller-chosen name: two callers that pass
-    the same stage key but DIFFERENT input frames (e.g. a test
-    planting duplicate vectors into the multiprobe corpus) must never
-    silently share a staged index — same name + same logical plan is
-    the only thing that hits."""
-    app = spark.sparkContext.applicationId
-    full_key = (app, *key, src.semanticHash())
-    return memoize(_STAGE_CACHE, full_key, lambda: build().persist())
+    """Memoized persist under ``key`` = (sf_dir, *kind). The front key
+    includes ``src``'s semantic plan hash, not just the caller-chosen
+    name: two callers that pass the same stage key but DIFFERENT input
+    frames (e.g. a test planting duplicate vectors into the multiprobe
+    corpus) must never silently share a staged index — same name +
+    same logical plan is the only thing that hits."""
+    sf_dir, *kind = key
+    return front(
+        spark, sf_dir, "sim_stage", lambda: build().persist(), *kind, src.semanticHash()
+    )
 
 
 def _celled(
@@ -952,7 +950,6 @@ def _ann_join_result_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consumer re-planned the probe join + top-k window per reference.
 # The frame is Q x k (~queries are a fixed 1% sample), tiny at any
 # SF; one eager localCheckpoint per (app, dataset) serves them all.
-_ANN_RESULT_CACHE: dict[tuple, DataFrame] = register_cache({}, name="ann_result")
 
 
 def sim_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -962,12 +959,13 @@ def sim_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the self-join ANN entries don't cover. Shares the staged IVF
     index with `sim_ivf_multiprobe` via the same stage key, so running
     both builds the index once; the top-k RESULT is itself a memoized
-    front (see _ANN_RESULT_CACHE) serving this entry plus the three
+    front ("ann_result") serving this entry plus the three
     downstream consumers. Recall >= 0.9 on planted neighbors is
     pinned by tests/test_scale_blocking.py::test_ann_join_recall."""
-    return memoize(
-        _ANN_RESULT_CACHE,
-        staged_key(spark, sf_dir, "annjoin-result"),
+    return front(
+        spark,
+        sf_dir,
+        "ann_result",
         lambda: _ann_join_result_build(spark, sf_dir).localCheckpoint(
             eager=True
         ),
@@ -1358,22 +1356,16 @@ LIMIT 10
 # entry is session-scoped (in-memory catalog), so a fresh session
 # rebuilds from the current fixture — no stale-index hazard.
 _ANN_INDEX_BUCKETS = 8
-_ANN_INDEX_CACHE: dict[tuple, tuple[str, str]] = {}
 
 
 def _ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per session+sf_dir) the persisted IVF index:
     returns (centroids_table, postings_table)."""
-    import hashlib
-    import os
-    import tempfile
+    return front(spark, sf_dir, "ann_index", lambda: _ivf_index_tables_build(spark, sf_dir))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    slot = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
+
+def _ivf_index_tables_build(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    slot = sf_slot(sf_dir)
     cents_name = f"ivf_cents_{slot}"
     post_name = f"ivf_postings_{slot}"
     emb, cents, ranked = _ivf_index(_emb_q(spark, sf_dir), stage_key=(sf_dir, "ivf"))
@@ -1381,7 +1373,7 @@ def _ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     spark.sql(f"DROP TABLE IF EXISTS {post_name}")
     (
         cents.write.format("parquet")
-        .option("path", os.path.join(tempfile.gettempdir(), f"pe_ivf_cents_{slot}_{app}"))
+        .option("path", staging_dir(spark, sf_dir, "ivf_cents"))
         .mode("overwrite")
         .saveAsTable(cents_name)
     )
@@ -1397,11 +1389,10 @@ def _ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .write.format("parquet")
         .bucketBy(_ANN_INDEX_BUCKETS, "cell")
         .sortBy("cell")
-        .option("path", os.path.join(tempfile.gettempdir(), f"pe_ivf_post_{slot}_{app}"))
+        .option("path", staging_dir(spark, sf_dir, "ivf_post"))
         .mode("overwrite")
         .saveAsTable(post_name)
     )
-    _ANN_INDEX_CACHE[key] = (cents_name, post_name)
     return cents_name, post_name
 
 
@@ -1686,13 +1677,11 @@ def _km_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unrolled iteration per consumer. Production persists the
 # assignment as the clustering artifact, so the staged shape is the
 # realistic one.
-_KM_ASSIGN_CACHE: dict[tuple, DataFrame] = register_cache({}, name="km_assign")
-
-
 def _km_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _KM_ASSIGN_CACHE,
-        staged_key(spark, sf_dir, "km_assign"),
+    return front(
+        spark,
+        sf_dir,
+        "km_assign",
         lambda: _km_assign_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 

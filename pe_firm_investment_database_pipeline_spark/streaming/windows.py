@@ -31,12 +31,12 @@ query shapes are identical.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.session_cache import front, staging_dir
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -51,26 +51,10 @@ _EVENT_SCHEMA = (
 )
 
 
-_INPUT_CACHE: dict[tuple, str] = {}
-
-
-def _slot(spark: SparkSession, sf_dir: str) -> str:
-    """Staging-dir discriminator: hash of the FULL sf_dir (distinct
-    data dirs sharing a basename must not collide) + the application
-    id (two concurrent drivers must not overwrite each other's files
-    mid-stream)."""
-    import hashlib
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
-    return f"{h}_{app}"
-
-
 def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
     """Normalize events (ns→µs timestamps, exact value cents) into a
     parquet dir the file stream source can read. Written once per
-    (session, sf_dir) — the streaming operators share it. Keyed by
-    applicationId (id() can be reused after gc).
+    (session, dataset) — the streaming operators share it.
 
     Staged as 4 files — the `_prepare_docs_input` discipline — so the
     micro-batch count is a FIXED property of the fixture: the
@@ -80,11 +64,11 @@ def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
     16 micro-batches — 16 state read+rewrite cycles per invocation —
     purely as an artifact of load_table's parallelism floor; the
     fixpoint itself is batch-boundary-independent by design)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _INPUT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    path = os.path.join(tempfile.gettempdir(), f"pe_stream_input_{_slot(spark, sf_dir)}")
+    return front(spark, sf_dir, "stream_input", lambda: _prepare_input_build(spark, sf_dir))
+
+
+def _prepare_input_build(spark: SparkSession, sf_dir: str) -> str:
+    path = staging_dir(spark, sf_dir, "stream_input")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -93,7 +77,6 @@ def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
         F.timestamp_micros(F.col("ts_us")).alias("ts"),
     )
     ev.repartition(4).write.mode("overwrite").parquet(path)
-    _INPUT_CACHE[key] = path
     return path
 
 
@@ -109,9 +92,9 @@ def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
 # _prepare_input / _prepare_docs_input — stays memoized: it is input
 # fixturing, the analogue of the parquet dataset, not query work).
 _STREAM_STATE_DIRS = {
-    "stream_dedup_lsh": ("pe_stream_lshdedup_", "pe_stream_lshdedup_ck_"),
-    "stream_upsert_foreachbatch": ("pe_upsert_", "pe_upsert_ck_"),
-    "stream_cdc_changelog": ("pe_cdc_", "pe_cdc_ck_"),
+    "stream_dedup_lsh": ("stream_lshdedup", "stream_lshdedup_ck"),
+    "stream_upsert_foreachbatch": ("upsert", "upsert_ck"),
+    "stream_cdc_changelog": ("cdc", "cdc_ck"),
 }
 
 
@@ -123,15 +106,8 @@ def evict_stream_state(spark: SparkSession, sf_dir: str, entry: str) -> None:
     fixpoint a fresh pass rewrites."""
     import shutil
 
-    prefixes = _STREAM_STATE_DIRS.get(entry)
-    if not prefixes:
-        return
-    slot = _slot(spark, sf_dir)
-    for p in prefixes:
-        shutil.rmtree(
-            os.path.join(tempfile.gettempdir(), f"{p}{slot}"),
-            ignore_errors=True,
-        )
+    for kind in _STREAM_STATE_DIRS.get(entry, ()):
+        shutil.rmtree(staging_dir(spark, sf_dir, kind), ignore_errors=True)
 
 
 def _read_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -406,20 +382,18 @@ def stream_ingest_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream."""
     from ..sources.sinks import append_jsonl
 
-    key = (spark.sparkContext.applicationId, sf_dir, "jsonl")
-    path = _INPUT_CACHE.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(), f"pe_stream_jsonl_{_slot(spark, sf_dir)}"
-        )
+    def build() -> str:
         import shutil
 
+        path = staging_dir(spark, sf_dir, "stream_jsonl")
         shutil.rmtree(path, ignore_errors=True)
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts_us"
         )
         append_jsonl(ev, path, wrap_meta=False)
-        _INPUT_CACHE[key] = path
+        return path
+
+    path = front(spark, sf_dir, "stream_jsonl", build)
     stream = spark.readStream.schema(
         "event_id BIGINT, user_id BIGINT, event_type STRING, ts_us BIGINT"
     ).json(path)
@@ -499,9 +473,8 @@ def snk_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle; the date partition column is also what a downstream batch
     reader prunes on."""
     in_path = _prepare_input(spark, sf_dir)
-    slot = _slot(spark, sf_dir)
-    out = os.path.join(tempfile.gettempdir(), f"pe_stream_sink_{slot}")
-    ck = os.path.join(tempfile.gettempdir(), f"pe_stream_sink_ck_{slot}")
+    out = staging_dir(spark, sf_dir, "stream_sink")
+    ck = staging_dir(spark, sf_dir, "stream_sink_ck")
     ev = (
         _read_stream(spark, in_path)
         .where("event_type = 'purchase'")
@@ -694,22 +667,19 @@ WHERE NOT EXISTS (
 # stream_dedup_lsh — streaming near-dup check against the persisted index
 # ---------------------------------------------------------------------------
 
-_DOCS_INPUT_CACHE: dict[tuple, str] = {}
-
-
 def _prepare_docs_input(spark: SparkSession, sf_dir: str) -> str:
     """The 'new batch' documents (doc_id % 10 = 0 — the same slice
     `dedup_incremental_lsh` uses) staged as a multi-file parquet dir
     for the file stream source. Written once per (session, sf_dir);
     4 files so availableNow + maxFilesPerTrigger genuinely exercises
     multiple micro-batches."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DOCS_INPUT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    path = os.path.join(
-        tempfile.gettempdir(), f"pe_stream_docs_{_slot(spark, sf_dir)}"
+    return front(
+        spark, sf_dir, "stream_docs", lambda: _prepare_docs_input_build(spark, sf_dir)
     )
+
+
+def _prepare_docs_input_build(spark: SparkSession, sf_dir: str) -> str:
+    path = staging_dir(spark, sf_dir, "stream_docs")
     (
         load_table(spark, sf_dir, "documents")
         .where("doc_id % 10 = 0")
@@ -718,7 +688,6 @@ def _prepare_docs_input(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(path)
     )
-    _DOCS_INPUT_CACHE[key] = path
     return path
 
 
@@ -750,9 +719,8 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx_name = _lsh_index_table(spark, sf_dir)
     in_path = _prepare_docs_input(spark, sf_dir)
-    slot = _slot(spark, sf_dir)
-    out = os.path.join(tempfile.gettempdir(), f"pe_stream_lshdedup_{slot}")
-    ck = os.path.join(tempfile.gettempdir(), f"pe_stream_lshdedup_ck_{slot}")
+    out = staging_dir(spark, sf_dir, "stream_lshdedup")
+    ck = staging_dir(spark, sf_dir, "stream_lshdedup_ck")
 
     def _match_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -818,9 +786,8 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch + touched-state), never O(history). The exact oracle is
     the batch argmax over the whole event table."""
     in_path = _prepare_input(spark, sf_dir)
-    slot = _slot(spark, sf_dir)
-    state_root = os.path.join(tempfile.gettempdir(), f"pe_upsert_{slot}")
-    ck = os.path.join(tempfile.gettempdir(), f"pe_upsert_ck_{slot}")
+    state_root = staging_dir(spark, sf_dir, "upsert")
+    ck = staging_dir(spark, sf_dir, "upsert_ck")
     latest: dict[str, str | None] = {"path": None}
 
     def _newest(df: DataFrame) -> DataFrame:
@@ -913,9 +880,8 @@ def stream_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys). Oracle: per-user newest event where that newest is not a
     tombstone."""
     in_path = _prepare_input(spark, sf_dir)
-    slot = _slot(spark, sf_dir)
-    state_root = os.path.join(tempfile.gettempdir(), f"pe_cdc_{slot}")
-    ck = os.path.join(tempfile.gettempdir(), f"pe_cdc_ck_{slot}")
+    state_root = staging_dir(spark, sf_dir, "cdc")
+    ck = staging_dir(spark, sf_dir, "cdc_ck")
     latest: dict[str, str | None] = {"path": None}
 
     def _newest(df: DataFrame) -> DataFrame:

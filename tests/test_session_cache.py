@@ -1,15 +1,23 @@
-"""Unit tests for the staged-front cache hygiene rules
+"""Unit tests for the front store's hygiene rules
 (pe_firm_investment_database_pipeline_spark/functions/session_cache.py):
-locked double-checked memoization, dataset-fingerprint re-keying, and
-the all-cache stale-application sweep. Pure-Python — no SparkSession
-needed (frames are stand-in objects; `memoize` is type-agnostic)."""
+locked double-checked memoization, dataset-fingerprint re-keying, the
+stale-application sweep, and targeted eviction. The pure tests need no
+SparkSession (a stand-in carries the application id; ``front`` is
+type-agnostic); the last test drives a real staging site."""
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
+import sys
 import threading
 
+import pytest
+
 from pe_firm_investment_database_pipeline_spark.functions import session_cache as sc
+
+PKG = pathlib.Path(sc.__file__).resolve().parents[1]
 
 
 class _FakeFrame:
@@ -21,73 +29,96 @@ class _FakeFrame:
         return self
 
 
-def test_memoize_builds_once_and_hits():
-    cache = sc.register_cache({})
+class _FakeSpark:
+    """Just enough of a SparkSession for ``front``: an application id."""
+
+    def __init__(self, app: str) -> None:
+        self.sparkContext = type("Ctx", (), {"applicationId": app})()
+
+
+@pytest.fixture
+def store(monkeypatch):
+    """An empty private store, so these tests neither see nor sweep
+    the fronts of the live test session."""
+    monkeypatch.setattr(sc, "_STORE", {})
+    return sc._STORE
+
+
+def test_front_builds_once_and_hits(store):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return _FakeFrame()
+
+    spark = _FakeSpark("app-1")
+    first = sc.front(spark, "dir", "x", build)
+    second = sc.front(spark, "dir", "x", build)
+    assert first is second
+    assert len(calls) == 1
+    # the name and the extra key components discriminate
+    assert sc.front(spark, "dir", "y", build) is not first
+    assert sc.front(spark, "dir", "x", build, "sub") is not first
+    assert len(calls) == 3
+
+
+def _race(n: int, fn, timeout: float) -> None:
+    """Run ``fn`` on ``n`` threads released together by a barrier."""
+    gate = threading.Barrier(n)
+
+    def run():
+        gate.wait()
+        fn()
+
+    ts = [threading.Thread(target=run) for _ in range(n)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join(timeout)
+    assert not any(t.is_alive() for t in ts)
+
+
+def test_front_concurrent_miss_builds_once(store):
+    """Threads racing the same cold key must share one build (a
+    check-then-insert pattern builds twice, leaking one checkpoint's
+    blocks until application exit): two threads, then eight with a
+    shortened switch interval."""
+    old_interval = sys.getswitchinterval()
     try:
-        calls = []
+        for n, switch in ((2, old_interval), (8, 1e-6)):
+            sys.setswitchinterval(switch)
+            calls = []
+            results = []
 
-        def build():
-            calls.append(1)
-            return _FakeFrame()
+            def build():
+                calls.append(1)
+                return _FakeFrame()
 
-        key = ("app-1", "dir", (0, 0), "x")
-        first = sc.memoize(cache, key, build)
-        second = sc.memoize(cache, key, build)
-        assert first is second
-        assert len(calls) == 1
+            def call(key=f"x{n}", build=build):
+                results.append(sc.front(_FakeSpark("app-1"), "d", key, build))
+
+            _race(n, call, 10)
+            assert len(calls) == 1
+            assert len(results) == n
+            assert all(r is results[0] for r in results)
     finally:
-        sc._ALL_CACHES.remove(cache)
+        sys.setswitchinterval(old_interval)
 
 
-def test_memoize_concurrent_miss_builds_once():
-    """Two threads racing the same cold key must share one build
-    (the pre-fix check-then-insert pattern built twice, leaking one
-    checkpoint's blocks until application exit)."""
-    cache = sc.register_cache({})
-    try:
-        calls = []
-        gate = threading.Barrier(2)
-        results = []
-
-        def build():
-            calls.append(1)
-            return _FakeFrame()
-
-        def run():
-            gate.wait()
-            results.append(sc.memoize(cache, ("app-1", "d", (0, 0)), build))
-
-        ts = [threading.Thread(target=run) for _ in range(2)]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
-        assert len(calls) == 1
-        assert results[0] is results[1]
-    finally:
-        sc._ALL_CACHES.remove(cache)
-
-
-def test_miss_sweeps_stale_apps_out_of_all_caches():
-    """A miss on ONE cache evicts dead-application entries from EVERY
-    registered cache — dead entries must not hide in a cache that
-    never misses."""
-    a = sc.register_cache({})
-    b = sc.register_cache({})
-    try:
-        b[("old-app", "d")] = _FakeFrame()
-        b[("app-2", "d")] = _FakeFrame()
-        sc.memoize(a, ("app-2", "d", "k"), _FakeFrame)
-        assert ("old-app", "d") not in b
-        assert ("app-2", "d") in b
-    finally:
-        sc._ALL_CACHES.remove(a)
-        sc._ALL_CACHES.remove(b)
+def test_miss_sweeps_stale_apps_out_of_all_caches(store):
+    """A miss on ONE front evicts dead-application entries of EVERY
+    front — dead entries must not hide under a name that never
+    misses."""
+    store[("old-app", "d", (0, 0), "a")] = _FakeFrame()
+    store[("app-2", "d", (0, 0), "b")] = _FakeFrame()
+    sc.front(_FakeSpark("app-2"), "d", "k", _FakeFrame)
+    assert {k[0] for k in store} == {"app-2"}
+    assert {k[3] for k in store} == {"b", "k"}
 
 
 def test_dataset_fingerprint_changes_on_rewrite(tmp_path):
     """Rewriting any table under sf_dir changes the fingerprint, so
-    staged_key re-keys and consumers rebuild instead of serving a
+    the front key changes and consumers rebuild instead of serving a
     checkpoint of the old data."""
     p = tmp_path / "t.parquet"
     p.write_bytes(b"v1")
@@ -105,18 +136,91 @@ def test_dataset_fingerprint_changes_on_rewrite(tmp_path):
     assert sc.dataset_fingerprint(str(tmp_path)) != fp2
 
 
+def test_front_rekeys_on_dataset_rewrite(store, tmp_path):
+    spark = _FakeSpark("app-1")
+    (tmp_path / "t.parquet").write_bytes(b"v1")
+    first = sc.front(spark, str(tmp_path), "x", _FakeFrame)
+    (tmp_path / "t.parquet").write_bytes(b"v2-longer")
+    second = sc.front(spark, str(tmp_path), "x", _FakeFrame)
+    assert second is not first
+    assert sc.front(spark, str(tmp_path), "x", _FakeFrame) is second
+
+
 def test_dataset_fingerprint_missing_dir_is_stable():
     assert sc.dataset_fingerprint("/nonexistent/path/xyz") == (0, 0)
 
 
-def test_evict_staged_unpersists_and_clears():
-    cache = sc.register_cache({})
-    try:
-        f = _FakeFrame()
-        cache[("app-1", "d")] = f
-        n = sc.evict_staged()
-        assert n >= 1
-        assert f.unpersisted
-        assert not cache
-    finally:
-        sc._ALL_CACHES.remove(cache)
+def test_evict_staged_unpersists_and_clears(store):
+    f = sc.front(_FakeSpark("app-1"), "d", "x", _FakeFrame)
+    sc.front(_FakeSpark("app-1"), "d", "path", lambda: "/tmp/staged")
+    n = sc.evict_staged()
+    assert n == 2
+    assert f.unpersisted
+    assert not store
+
+
+def test_evict_drops_only_the_named_matching_fronts(store):
+    spark = _FakeSpark("app-1")
+    all_ = sc.front(spark, "d", "scd2", _FakeFrame, "all")
+    upd = sc.front(spark, "d", "scd2", _FakeFrame, "updates")
+    other = sc.front(spark, "d", "km_curve", _FakeFrame)
+    assert sc.evict("scd2", "all") == 1
+    assert all_.unpersisted and not upd.unpersisted
+    assert {k[3:] for k in store} == {("scd2", "updates"), ("km_curve",)}
+    assert sc.evict("scd2") == 1
+    assert not other.unpersisted
+    # unknown names are a no-op, not an error
+    assert sc.evict("no_such_front") == 0
+
+
+def test_staging_dir_shape():
+    """Tests and the stream-state eviction derive staged paths, so the
+    shape is pinned: <tmp>/pe_<kind>_<md5(sf_dir)[:10]>_<app>."""
+    import hashlib
+    import tempfile
+
+    path = sc.staging_dir(_FakeSpark("local:1/x"), "/data/sf", "frag")
+    h = hashlib.md5(b"/data/sf").hexdigest()[:10]
+    assert path == os.path.join(tempfile.gettempdir(), f"pe_frag_{h}_local_1_x")
+
+
+def test_no_module_level_cache_dicts():
+    """Every memo goes through session_cache.front: no module under
+    plans/ or streaming/ binds its own module-level ``*_CACHE``."""
+    offenders = []
+    for sub in ("plans", "streaming"):
+        for path in sorted((PKG / sub).glob("*.py")):
+            for node in ast.parse(path.read_text()).body:
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target] if isinstance(node, ast.AnnAssign)
+                    else []
+                )
+                offenders += [
+                    f"{sub}/{path.name}:{t.id}"
+                    for t in targets
+                    if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
+                ]
+    assert not offenders, offenders
+
+
+def test_staging_site_race_builds_once(spark, monkeypatch):
+    """Two threads racing the first call of a staging site build its
+    directory once (the site used to be an unlocked get-then-set)."""
+    from pe_firm_investment_database_pipeline_spark.plans import io_ops
+
+    sf = "/root/testdata/sf0.001"
+    sc.evict("lineage")
+    builds = []
+    real_load = io_ops.load_table
+
+    def counting_load(*args, **kwargs):
+        builds.append(args[2])
+        return real_load(*args, **kwargs)
+
+    monkeypatch.setattr(io_ops, "load_table", counting_load)
+    paths = []
+    _race(2, lambda: paths.append(io_ops._lineage_dir(spark, sf)), 300)
+    assert builds == ["events"]
+    assert len(paths) == 2 and paths[0] == paths[1]
+    assert os.path.isdir(os.path.join(paths[0], "batch_a"))

@@ -16,6 +16,11 @@ import os
 
 from pyspark.sql import functions as F
 
+from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+    evict,
+    staging_dir,
+)
+
 SCHEMA = "event_id BIGINT, user_id BIGINT, ts TIMESTAMP"
 
 
@@ -231,8 +236,6 @@ def test_stream_parquet_sink_exactly_once(spark):
     availableNow run over the same input and checkpoint commits no new
     files, so the read-back aggregate is identical — and the output
     directory is physically partitioned by the epoch-day column."""
-    import tempfile
-
     from pe_firm_investment_database_pipeline_spark.streaming import windows as SW
 
     sf = "/root/testdata/sf0.001"
@@ -245,9 +248,7 @@ def test_stream_parquet_sink_exactly_once(spark):
         for r in SW.snk_stream_parquet(spark, sf).collect()
     }
     assert r1 and r1 == r2
-    out = os.path.join(
-        tempfile.gettempdir(), f"pe_stream_sink_{SW._slot(spark, sf)}"
-    )
+    out = staging_dir(spark, sf, "stream_sink")
     assert any(d.startswith("day=") for d in os.listdir(out))
 
 
@@ -258,8 +259,6 @@ def test_stream_dedup_lsh_multibatch_and_idempotent(spark):
     extra steps), (b) equal its batch twin dedup_incremental_lsh
     exactly, and (c) be idempotent under re-run with the same
     checkpoint (exactly-once sink: no duplicated pairs)."""
-    import tempfile
-
     from pe_firm_investment_database_pipeline_spark.plans import textops
     from pe_firm_investment_database_pipeline_spark.streaming import windows as SW
 
@@ -274,9 +273,7 @@ def test_stream_dedup_lsh_multibatch_and_idempotent(spark):
     }
     assert streamed == batch and streamed
     # multiple micro-batches: the checkpoint's offset log has >1 entry
-    ck = os.path.join(
-        tempfile.gettempdir(), f"pe_stream_lshdedup_ck_{SW._slot(spark, sf)}"
-    )
+    ck = staging_dir(spark, sf, "stream_lshdedup_ck")
     offsets = [f for f in os.listdir(os.path.join(ck, "offsets")) if f.isdigit()]
     assert len(offsets) > 1, f"expected >1 micro-batch, got {sorted(offsets)}"
     # idempotent re-run: same checkpoint, nothing new processed
@@ -399,3 +396,22 @@ def test_stateful_ops_run_on_rocksdb_backend(spark):
         else:
             spark.conf.set(conf, prev)
     assert rocksdb == baseline
+
+
+def test_python_stream_source_rebuild_leaves_no_sink_table(spark):
+    """src_python_stream_source drains its feed into a memory sink
+    (registered as temp view pe_pyss_N), then serves a checkpoint of
+    the aggregate. Building the entry twice — evicting its front in
+    between — must leave no pe_pyss_* table in the catalog."""
+    from pe_firm_investment_database_pipeline_spark.plans.io_ops import (
+        src_python_stream_source,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    rows = []
+    for _ in range(2):
+        evict("pyss")
+        rows.append(sorted(src_python_stream_source(spark, sf).collect()))
+    assert rows[0] == rows[1] and rows[0]
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("pe_pyss_")]
+    assert not left, left
