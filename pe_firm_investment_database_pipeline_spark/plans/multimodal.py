@@ -5,8 +5,9 @@ extracted / frame-sampled through Arrow-batched ``mapInPandas`` stages.
 Codec libraries (MP4/video coders) are not in this container, so that
 decode step is stubbed (``decode_image_real`` raises
 NotImplementedError) behind a deterministic fake — but formats
-decodable without one run REAL byte-level decodes over genuine binary
-columns, closed-form oracle-checked: ``mm_decode_ppm`` (P6 header
+decodable without one run REAL byte-level decodes of genuine binary
+payloads (encode and decode fused in one Arrow stage per task),
+closed-form oracle-checked: ``mm_decode_ppm`` (P6 header
 token parse), ``mm_decode_wav`` (RIFF chunk walk + PCM16 samples),
 ``mm_decode_png`` (stdlib-zlib inflate + hand-rolled per-row
 unfiltering incl. Paeth), and ``mm_decode_jpeg`` (hand-rolled
@@ -29,7 +30,7 @@ and it is embarrassingly parallel per partition.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -819,20 +820,45 @@ FROM spine s LEFT JOIN per_doc p ON s.doc_id = p.doc_id
 # mm_decode_ppm / mm_decode_wav — REAL codec legs (no library needed)
 # ---------------------------------------------------------------------------
 #
-# The compressed-codec decode (PNG/JPEG/MP4) remains the documented
-# environment stub above (decode_image_real) — but the UNCOMPRESSED
+# The video decode (MP4) remains the documented environment stub
+# above (decode_image_real) — but the UNCOMPRESSED
 # container formats need no codec library at all, so these two entries
-# run a genuinely real encode -> binary column -> parse-the-bytes
-# decode round trip: mm_decode_ppm writes and parses binary P6 PPM
-# (header tokens read FROM THE PAYLOAD, not from metadata), and
-# mm_decode_wav writes and walks a real RIFF/WAVE chunk layout
-# (fmt + data chunks located by tag scan) with PCM16-LE samples.
-# Payload content is a deterministic function of doc_id alone, so the
-# DuckDB oracle recomputes every decoded statistic CLOSED-FORM — the
-# decode path is hash-checked end to end. Scale shape: both stages are
-# Arrow-batched mapInPandas (batch in, batch out), embarrassingly
-# parallel per partition; the binary column travels between the encode
-# and decode stages exactly as real media bytes would.
+# run a genuinely real encode -> bytes -> parse-the-bytes decode round
+# trip: mm_decode_ppm writes and parses binary P6 PPM (header tokens
+# read FROM THE PAYLOAD, not from metadata), and mm_decode_wav writes
+# and walks a real RIFF/WAVE chunk layout (fmt + data chunks located
+# by tag scan) with PCM16-LE samples. Payload content is a
+# deterministic function of doc_id alone, so the DuckDB oracle
+# recomputes every decoded statistic CLOSED-FORM — the decode path is
+# hash-checked end to end. Scale shape: encode and decode run fused
+# in ONE Arrow-batched mapInPandas stage (_codec_roundtrip, batch of
+# doc_ids in, batch of stats out), embarrassingly parallel per
+# partition. The payload goes from encoder to decoder inside the
+# Python worker: a separate encode stage pipelined into a decode
+# stage would hold two Python workers per task and ship every
+# payload across Arrow twice, for bytes no JVM operator reads.
+
+
+def _codec_roundtrip(
+    ids: DataFrame,
+    encode: Callable[[int], bytes],
+    decode: Callable[[bytes], tuple[int, ...]],
+    stats: tuple[str, ...],
+) -> DataFrame:
+    """``decode(encode(doc_id))`` for every row of ``ids`` in one
+    Arrow-batched mapInPandas stage, one ``long`` column per name in
+    ``stats`` (the decoder's tuple, in order) beside ``doc_id``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [decode(encode(int(d))) for d in pdf["doc_id"]]
+            out = {"doc_id": pdf["doc_id"]}
+            for i, name in enumerate(stats):
+                out[name] = pd.Series([r[i] for r in rows], dtype="int64")
+            yield pd.DataFrame(out)
+
+    schema = ", ".join(f"{c} long" for c in ("doc_id", *stats))
+    return ids.mapInPandas(run, schema=schema)
 
 
 def _ppm_dims(doc_id: int) -> tuple[int, int]:
@@ -879,46 +905,18 @@ def decode_ppm(payload: bytes) -> tuple[int, int, int, int, int, int]:
 
 
 def mm_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode over a binary column — P6 PPM needs no codec
-    library, so unlike the PNG/JPEG stub this entry truly parses the
-    payload bytes (module note above). Encode and decode are separate
-    Arrow-batched mapInPandas stages with the binary column between
-    them; every decoded statistic is closed-form recomputable by the
-    oracle because pixels are a pure function of doc_id."""
+    """REAL image decode of binary payload bytes — P6 PPM needs no
+    codec library, so this entry truly parses the payload bytes
+    (module note above). Encode and decode run fused in one
+    Arrow-batched mapInPandas stage (_codec_roundtrip); every decoded
+    statistic is closed-form recomputable by the oracle because
+    pixels are a pure function of doc_id."""
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode_ppm(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    payloads = ids.mapInPandas(enc, schema="doc_id long, payload binary")
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_ppm(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series([r[0] for r in rows], dtype="int64"),
-                    "height": pd.Series([r[1] for r in rows], dtype="int64"),
-                    "n_bytes": pd.Series([r[2] for r in rows], dtype="int64"),
-                    "r_sum": pd.Series([r[3] for r in rows], dtype="int64"),
-                    "g_sum": pd.Series([r[4] for r in rows], dtype="int64"),
-                    "b_sum": pd.Series([r[5] for r in rows], dtype="int64"),
-                }
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        schema=(
-            "doc_id long, width long, height long, n_bytes long,"
-            " r_sum long, g_sum long, b_sum long"
-        ),
+    return _codec_roundtrip(
+        ids,
+        encode_ppm,
+        decode_ppm,
+        ("width", "height", "n_bytes", "r_sum", "g_sum", "b_sum"),
     )
 
 
@@ -1005,49 +1003,18 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, int, int, int]:
 
 
 def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode over a binary column — uncompressed
+    """REAL audio decode of binary payload bytes — uncompressed
     RIFF/WAVE PCM16 needs no codec library (module note above): the
-    decode stage walks the chunk layout from the payload bytes and
-    parses the samples with numpy. Oracle is closed-form over the
-    deterministic sample generator."""
+    decoder walks the chunk layout from the payload bytes and parses
+    the samples with numpy, fused with the encoder in one
+    Arrow-batched mapInPandas stage (_codec_roundtrip). Oracle is
+    closed-form over the deterministic sample generator."""
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode_wav(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    payloads = ids.mapInPandas(enc, schema="doc_id long, payload binary")
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_wav(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": pd.Series(
-                        [r[0] for r in rows], dtype="int64"
-                    ),
-                    "n_samples": pd.Series(
-                        [r[1] for r in rows], dtype="int64"
-                    ),
-                    "s_min": pd.Series([r[2] for r in rows], dtype="int64"),
-                    "s_max": pd.Series([r[3] for r in rows], dtype="int64"),
-                    "s_sum": pd.Series([r[4] for r in rows], dtype="int64"),
-                    "ss_sum": pd.Series([r[5] for r in rows], dtype="int64"),
-                }
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        schema=(
-            "doc_id long, sample_rate long, n_samples long,"
-            " s_min long, s_max long, s_sum long, ss_sum long"
-        ),
+    return _codec_roundtrip(
+        ids,
+        encode_wav,
+        decode_wav,
+        ("sample_rate", "n_samples", "s_min", "s_max", "s_sum", "ss_sum"),
     )
 
 
@@ -1089,8 +1056,8 @@ GROUP BY doc_id
 # function of doc_id, so every decoded statistic is closed-form in
 # the oracle; filters and DEFLATE are lossless, so the sums are
 # filter-invariant. Scale shape: identical to the PPM/WAV legs —
-# two Arrow-batched mapInPandas stages with the binary column
-# between them, embarrassingly parallel per partition.
+# encode and decode fused in one Arrow-batched mapInPandas stage
+# (_codec_roundtrip), embarrassingly parallel per partition.
 
 
 def _png_dims(doc_id: int) -> tuple[int, int]:
@@ -1250,50 +1217,22 @@ def decode_png(payload: bytes) -> tuple[int, int, int, int, int, int]:
 
 
 def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-image decode over a binary column — stdlib
-    zlib is the only dependency (module note above), so unlike
-    JPEG/MP4 this is a genuine inflate + unfilter, not a stub.
-    Encode and decode are separate Arrow-batched mapInPandas stages
-    with the binary column between them; payload byte length is
+    """REAL compressed-image decode of binary payload bytes — stdlib
+    zlib is the only dependency (module note above), so unlike MP4
+    this is a genuine inflate + unfilter, not a stub. Encode and
+    decode run fused in one Arrow-batched mapInPandas stage
+    (_codec_roundtrip); payload byte length is
     compression-dependent and deliberately NOT an output column —
     every emitted statistic is closed-form over the deterministic
     pixel generator, so the oracle hash-checks the decode end to
     end (the filters and DEFLATE being lossless is exactly what the
     parity proves)."""
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode_png(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    payloads = ids.mapInPandas(enc, schema="doc_id long, payload binary")
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_png(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series([r[0] for r in rows], dtype="int64"),
-                    "height": pd.Series([r[1] for r in rows], dtype="int64"),
-                    "n_px": pd.Series([r[2] for r in rows], dtype="int64"),
-                    "r_sum": pd.Series([r[3] for r in rows], dtype="int64"),
-                    "g_sum": pd.Series([r[4] for r in rows], dtype="int64"),
-                    "b_sum": pd.Series([r[5] for r in rows], dtype="int64"),
-                }
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        schema=(
-            "doc_id long, width long, height long, n_px long,"
-            " r_sum long, g_sum long, b_sum long"
-        ),
+    return _codec_roundtrip(
+        ids,
+        encode_png,
+        decode_png,
+        ("width", "height", "n_px", "r_sum", "g_sum", "b_sum"),
     )
 
 
@@ -1678,56 +1617,24 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, int, int, int]:
 
 
 def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode over a binary column — the entropy
+    """REAL baseline-JPEG decode of binary payload bytes — the entropy
     coder is hand-rolled (canonical Huffman per ITU T.81 Annex C/K,
     byte-unstuffing bit reader, run/size AC RLE) and the IDCT is a
     numpy matrix product, so no codec library is needed and the
     module's environment stub now covers only MP4/video. Encode and
-    decode are separate Arrow-batched mapInPandas stages with the
-    binary column between them. Fixture blocks are constant, making
+    decode run fused in one Arrow-batched mapInPandas stage
+    (_codec_roundtrip). Fixture blocks are constant, making
     the quantized spectrum DC-only and the roundtrip exactly
     lossless — every output statistic is closed-form over the block
     generator, so the oracle hash-checks marker parsing, Huffman
     decode, dequantization, zigzag and IDCT end to end; the AC path
     is pinned at the coefficient level in tests/test_round12_ops.py."""
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_jpeg(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    payloads = ids.mapInPandas(enc, schema="doc_id long, payload binary")
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_jpeg(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series([r[0] for r in rows], dtype="int64"),
-                    "height": pd.Series([r[1] for r in rows], dtype="int64"),
-                    "n_blocks": pd.Series(
-                        [r[2] for r in rows], dtype="int64"
-                    ),
-                    "px_sum": pd.Series([r[3] for r in rows], dtype="int64"),
-                    "px_min": pd.Series([r[4] for r in rows], dtype="int64"),
-                    "px_max": pd.Series([r[5] for r in rows], dtype="int64"),
-                }
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        schema=(
-            "doc_id long, width long, height long, n_blocks long,"
-            " px_sum long, px_min long, px_max long"
-        ),
+    return _codec_roundtrip(
+        ids,
+        encode_jpeg,
+        decode_jpeg,
+        ("width", "height", "n_blocks", "px_sum", "px_min", "px_max"),
     )
 
 

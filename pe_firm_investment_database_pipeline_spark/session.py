@@ -21,6 +21,24 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def host_memory_bytes() -> int | None:
+    """Physical memory of this host, or None where sysconf lacks it."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return None
+
+
+def default_driver_memory(host_bytes: int | None) -> str:
+    """Driver heap for a host with ``host_bytes`` of RAM: half of it in
+    whole GiB, at least 1g and at most 16g (16g when unknown). In local
+    mode the driver JVM is the executor too, and the Python workers,
+    page cache and other processes need the other half."""
+    if not host_bytes:
+        return "16g"
+    return f"{min(16, max(1, host_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "pe-pipeline-spark",
     shuffle_partitions: int | None = None,
@@ -30,7 +48,9 @@ def get_spark(
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
     )
-    mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = driver_memory or os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", default_driver_memory(host_memory_bytes())
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -70,7 +70,7 @@ def load_table(
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        return _load_events(spark, sf_dir)
+        return _load_events(spark, sf_dir, spread)
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     if not spread or name in _NO_SPREAD:
@@ -115,7 +115,7 @@ def _read_events_raw(spark: SparkSession, path: str) -> DataFrame:
             spark.conf.set(conf, prev)
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _load_events(spark: SparkSession, sf_dir: str, spread: bool) -> DataFrame:
     """Load events with a normalized, timezone-free time axis. The
     fixture's ``ts`` physical type has varied across testdata
     generations (parquet TIMESTAMP(NANOS) read as int64 via
@@ -137,7 +137,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _read_events_raw(spark, path)
     ts_type = raw.schema["ts"].dataType
 
-    df = _spread(spark, raw, path)
+    df = _spread(spark, raw, path) if spread else raw
     if isinstance(ts_type, T.LongType):
         # nanosAsLong path: ts is already int64 epoch nanos. Integer
         # division end-to-end — int64 nanos exceed double precision, so

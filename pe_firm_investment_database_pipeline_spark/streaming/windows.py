@@ -69,15 +69,21 @@ def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
 
 def _prepare_input_build(spark: SparkSession, sf_dir: str) -> str:
     path = staging_dir(spark, sf_dir, "stream_input")
-    ev = load_table(spark, sf_dir, "events").select(
+    _stream_feed(spark, sf_dir).write.mode("overwrite").parquet(path)
+    return path
+
+
+def _stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The normalized events feed in 4 partitions. The scan is loaded
+    unspread, so repartition(4) is its one round-robin exchange."""
+    ev = load_table(spark, sf_dir, "events", spread=False).select(
         "event_id",
         "user_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
         F.timestamp_micros(F.col("ts_us")).alias("ts"),
     )
-    ev.repartition(4).write.mode("overwrite").parquet(path)
-    return path
+    return ev.repartition(4)
 
 
 # The three entries below persist checkpoint + state/sink dirs per
@@ -149,7 +155,11 @@ def _run(stream_df: DataFrame, mode: str, max_partitions: int = 32) -> DataFrame
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    # the resolved frame holds the sink's plan, not the catalog name:
+    # drop the view, or every call leaves one more stream_out_* behind
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # ---------------------------------------------------------------------------

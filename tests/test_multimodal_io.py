@@ -92,3 +92,49 @@ def test_phash_neardup_finds_planted_clones(spark, sf_dir):
     }
     got_exact = {(r["doc1"], r["doc2"]) for r in rows if r["hamming"] == 0}
     assert planted <= got_exact
+
+
+def test_python_binary_column_reaches_jvm_intact(spark):
+    """A mapInPandas stage that emits a ``binary`` column hands the JVM
+    the exact bytes: Spark's length and md5 of every payload equal the
+    Python-side values, including empty and NUL-bearing payloads."""
+    import hashlib
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pe_firm_investment_database_pipeline_spark.plans.multimodal import (
+        encode_jpeg,
+        encode_png,
+        encode_ppm,
+        encode_wav,
+    )
+
+    encoders = (encode_png, encode_wav, encode_jpeg, encode_ppm)
+
+    def payload(d: int) -> bytes:
+        if d % 5 == 0:
+            return b"" if d % 10 == 0 else b"\x00" * d
+        return encoders[d % 4](d)
+
+    def emit(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"],
+                    "payload": [payload(int(d)) for d in pdf["id"]],
+                }
+            )
+
+    got = {
+        r["id"]: (r["n"], r["md5"])
+        for r in spark.range(0, 64, numPartitions=4)
+        .mapInPandas(emit, schema="id long, payload binary")
+        .select("id", F.length("payload").alias("n"), F.md5("payload").alias("md5"))
+        .collect()
+    }
+    want = {
+        d: (len(payload(d)), hashlib.md5(payload(d)).hexdigest())
+        for d in range(64)
+    }
+    assert got == want

@@ -415,3 +415,65 @@ def test_python_stream_source_rebuild_leaves_no_sink_table(spark):
     assert rows[0] == rows[1] and rows[0]
     left = [t.name for t in spark.catalog.listTables() if t.name.startswith("pe_pyss_")]
     assert not left, left
+
+
+def test_memory_sink_runs_leave_no_stream_out_views(spark):
+    """Every windows._run call drains a stream into a memory sink named
+    stream_out_<uuid>. Repeated calls must leave none of those views
+    behind, and the returned frames still collect and derive after the
+    view is gone."""
+    from pe_firm_investment_database_pipeline_spark.streaming.stateful import (
+        stream_custom_state,
+    )
+    from pe_firm_investment_database_pipeline_spark.streaming.windows import (
+        stream_tumbling,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    rounds = []
+    for _ in range(3):
+        custom = stream_custom_state(spark, sf)
+        tumbling = stream_tumbling(spark, sf)
+        rounds.append(
+            (
+                sorted(custom.collect()),
+                sorted(tumbling.collect()),
+                tumbling.groupBy("event_type").count().count(),
+            )
+        )
+    assert rounds[0][0] and rounds[0][1] and rounds[0][2]
+    assert rounds[1] == rounds[0] and rounds[2] == rounds[0]
+    left = [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")
+    ]
+    assert not left, left
+
+
+def _round_robin_exchanges(df) -> int:
+    plan = df._jdf.queryExecution().sparkPlan()
+    count, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            count += "RoundRobinPartitioning" in node.outputPartitioning().toString()
+        children = node.children()
+        for i in range(children.size()):
+            stack.append(children.apply(i))
+    return count
+
+
+def test_stream_feed_stages_with_one_exchange(spark):
+    """Staging the events feed for the file stream source is one
+    round-robin exchange (repartition(4)) over an unspread scan, and
+    load_table's spread flag is honored for events."""
+    from pe_firm_investment_database_pipeline_spark.sources.tables import load_table
+    from pe_firm_investment_database_pipeline_spark.streaming.windows import (
+        _stream_feed,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    feed = _stream_feed(spark, sf)
+    assert _round_robin_exchanges(feed) == 1
+    assert _round_robin_exchanges(load_table(spark, sf, "events", spread=False)) == 0
+    if spark.sparkContext.defaultParallelism > 1:
+        assert _round_robin_exchanges(load_table(spark, sf, "events")) == 1
